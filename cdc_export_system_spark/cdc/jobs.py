@@ -16,9 +16,11 @@ Transactionality: the reference wraps query + watermark upsert in one DB
 transaction but writes the CSV non-atomically inside it (exports.py:90
 precedes the jobs.py:42 commit, so a failed job can leave a file behind).
 Here the sink itself is atomic (temp + rename) and the watermark commit
-is an atomic pointer swap that happens strictly after the sink commit —
-a failed job leaves no file and no state change. Documented divergence:
-strictly stronger than the reference.
+happens strictly after the sink commit: the driver writes a small
+fsynced JSON snapshot and publishes it by winning a link(2) election on
+the next pointer of the state's CAS chain (state/watermark.py; no Spark
+job) — a failed job leaves no file and no state change. Documented
+divergence: strictly stronger than the reference.
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import csv
 import os
-from datetime import datetime, timedelta
+import uuid
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,7 @@ from cdc_export_system_spark.cdc.jobs import (
     start_export_job,
 )
 from cdc_export_system_spark.datagen import PINNED_NOW, generate_users
+from cdc_export_system_spark.schemas import WATERMARKS_SCHEMA
 from cdc_export_system_spark.state.watermark import WatermarkStore
 
 N_USERS = 1_000
@@ -189,6 +191,89 @@ def test_watermark_multiple_consumers_isolated(store):
     assert store.get("b") == t1[1]
 
 
+def test_watermark_timestamps_round_trip_like_spark(spark, store):
+    """Watermarks are stored as ISO-8601 text; reads return exactly what
+    a Spark TimestampType round trip returns (the earlier parquet-backed
+    store): naive, microseconds kept, an aware input normalised to the
+    process zone (naive UTC under the suite's UTC process)."""
+    naive = datetime(2026, 5, 6, 7, 8, 9, 123456)
+    aware = datetime(2026, 5, 6, 7, 8, 9, 654321, tzinfo=timezone(timedelta(hours=5)))
+    store.upsert("naive", naive)
+    store.upsert("aware", aware)
+    via_spark = spark.createDataFrame([(aware,)], "t timestamp").first()["t"]
+    assert store.get("naive") == naive
+    assert store.get("aware") == via_spark
+    assert store.get("aware").tzinfo is None
+    assert store.get("aware").microsecond == 654321
+    snap = {r["consumer_id"]: r["last_exported_at"] for r in store.snapshot().collect()}
+    assert snap == {"naive": naive, "aware": via_spark}
+    assert store.snapshot().schema == WATERMARKS_SCHEMA
+
+
+def test_legacy_parquet_snapshot_is_read_then_rewritten(spark, store):
+    """A live version written by the earlier Spark-backed store (a
+    parquet directory) must keep its watermarks — reading it as "no
+    watermark" would make every incremental job export nothing — and
+    the next upsert rewrites the table as a JSON snapshot file."""
+    t = datetime(2026, 3, 4, 5, 6, 7, 123456)
+    version = uuid.uuid4().hex
+    vdir = os.path.join(store.state_dir, "versions")
+    spark.createDataFrame([("old", t, t)], WATERMARKS_SCHEMA).coalesce(1).write.parquet(
+        os.path.join(vdir, version)
+    )
+    with open(os.path.join(store.state_dir, f"CURRENT.{1:020d}"), "w") as f:
+        f.write(version)
+    assert store.get("old") == t
+    assert [tuple(r) for r in store.snapshot().collect()] == [("old", t, t)]
+    store.upsert("new", NOW)
+    assert store.get("old") == t
+    assert store.get("new") == NOW
+    live = store._current_version()
+    assert os.path.isfile(os.path.join(vdir, live))
+    # the legacy directory is GC'd like any other snapshot once buried
+    os.utime(os.path.join(vdir, version), (1, 1))
+    store._gc(keep=live, retain=1, min_age_s=60.0)
+    assert os.listdir(vdir) == [live]
+
+
+def test_watermark_state_ops_run_no_spark_jobs(spark, store, monkeypatch):
+    """get, upsert and a lost-election retry are driver-side file I/O:
+    none of them may launch a Spark job."""
+    from cdc_export_system_spark.state import watermark as wm_mod
+
+    rival = WatermarkStore(spark, store.state_dir)
+    real_publish = wm_mod.link_publish
+    lost = []
+
+    def publish_after_rival(tmp, target):
+        if not lost:  # a concurrent commit takes this sequence first
+            lost.append(target)
+            rival.upsert("rival", NOW)
+        return real_publish(tmp, target)
+
+    sc = spark.sparkContext
+    group = f"wm-no-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "watermark state ops")
+    try:
+        assert store.get("c") is None
+        store.upsert("c", NOW)
+        assert store.get("c") == NOW
+        monkeypatch.setattr(wm_mod, "link_publish", publish_after_rival)
+        store.upsert("c", NOW + timedelta(minutes=1))
+        assert lost
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the group does capture jobs run on this thread
+        spark.range(1).count()
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert store.get("c") == NOW + timedelta(minutes=1)
+    assert store.get("rival") == NOW
+    # the losing commit's orphan snapshot file was deleted
+    vdir = os.path.join(store.state_dir, "versions")
+    assert len(os.listdir(vdir)) == len(store._chain()) == 3
+
+
 def test_failed_job_leaves_no_state(spark, users, store, tmp_path):
     out = str(tmp_path / "out")
     with pytest.raises(ValueError):
@@ -239,8 +324,9 @@ def test_forget_users_purge_and_audit_partition_the_table(spark):
 
 
 def test_concurrent_consumer_upserts_all_survive(spark, tmp_path):
-    """REAL write-write races on the watermark store: four threads each
-    advance their OWN consumer's watermark five times concurrently.
+    """REAL write-write races on the watermark store: eight threads each
+    advance their OWN consumer's watermark 25 times concurrently (an
+    upsert is a few ms of file I/O, so elections really collide).
     The reference runs exports as concurrent background tasks against
     per-row DB transactions, so every consumer's final watermark must
     survive; the store's original read-merge-replace commit lost 3 of
@@ -255,7 +341,7 @@ def test_concurrent_consumer_upserts_all_survive(spark, tmp_path):
     d = str(tmp_path / "wm-race")
     store = WatermarkStore(spark, d)
     base = datetime(2024, 1, 1)
-    n_threads, n_upserts = 4, 5
+    n_threads, n_upserts = 8, 25
 
     def writer(tid: int) -> None:
         s = WatermarkStore(spark, d)
@@ -268,7 +354,8 @@ def test_concurrent_consumer_upserts_all_survive(spark, tmp_path):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=120)
+        assert not t.is_alive()
 
     rows = {
         r["consumer_id"]: r["last_exported_at"]
