@@ -8,10 +8,12 @@ cf. PAPERS.md MMDS-style LSH):
    shingle hashes — computed ROW-LOCALLY with aggregate() over the shingle
    array (no explode, no shuffle; the signature stage is a pure map)
 3. LSH banding: NUM_BANDS bands of ROWS_PER_BAND signature rows, band
-   digest = md5 of the joined rows; candidate pairs are generated INSIDE
-   each (band, digest) bucket after a single groupBy — the corpus is never
-   self-joined, so the only exchanges in the whole pipeline are the bucket
-   groupBy (16 digests/doc) and the final pair distinct
+   digest = the band's two rows packed losslessly into one bigint (the
+   DuckDB oracle's md5 of the joined rows groups identically); candidate
+   pairs are generated INSIDE each (band, digest) bucket after a single
+   groupBy — the corpus is never self-joined, so the only exchanges in
+   the whole pipeline are the bucket groupBy (16 digests/doc) and the
+   final pair distinct
 4. verify: exact shingle-set Jaccard on candidates only (the quadratic
    step runs on |candidates|, not |corpus|^2)
 
@@ -27,9 +29,8 @@ is NUM_PERM longs/doc (~256 B/doc), 40 GB per 100 B docs — fine to shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_export_system_spark.io.sources import load_table_fanned as load_table
 from cdc_export_system_spark.registry import register
 
 P = (1 << 31) - 1  # Mersenne prime 2^31-1
@@ -107,21 +108,20 @@ def shingles_df(docs: DataFrame) -> DataFrame:
     )
 
 
-def _coeff_array_sql(num_perm: int = NUM_PERM) -> str:
-    """The num_perm (a, b) permutation coefficients as one array literal."""
-    coeffs = COEFFS if num_perm == NUM_PERM else _lcg_coeffs(num_perm)
+def _coeff_array_sql() -> str:
+    """The NUM_PERM (a, b) permutation coefficients as one array literal."""
     return "array(" + ", ".join(
         f"named_struct('a', cast({a} as bigint), 'b', cast({b} as bigint))"
-        for a, b in coeffs
+        for a, b in COEFFS
     ) + ")"
 
 
-def _sig_fold_sql(num_perm: int = NUM_PERM) -> str:
-    """ONE aggregate() fold producing all num_perm mins as an array:
+def _sig_fold_sql() -> str:
+    """ONE aggregate() fold producing all NUM_PERM mins as an array:
     per shingle hash, zip_with updates every permutation's running min.
-    Measurably faster than num_perm separate aggregate() folds (each of
+    Measurably faster than NUM_PERM separate aggregate() folds (each of
     which re-traverses the shingle-hash array), bit-identical output."""
-    coeffs = _coeff_array_sql(num_perm)
+    coeffs = _coeff_array_sql()
     return (
         f"aggregate(hs, transform({coeffs}, c -> cast({P} as bigint)), "
         f"(acc, h) -> zip_with(acc, {coeffs}, "
@@ -129,98 +129,10 @@ def _sig_fold_sql(num_perm: int = NUM_PERM) -> str:
     )
 
 
-def minhash_signature(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """doc_id + m0..m{num_perm-1} minhash signature columns. ``num_perm``
-    is the accuracy knob (estimator stderr ~ 1/sqrt(num_perm), linear
-    signature cost); the registered queries bind the oracle-matched
-    default.
-
-    All permutation mins come from ONE aggregate() fold over the hashed
-    shingle array (_sig_fold_sql) — the signature stage is a shuffle-free
-    map (the earlier explode + groupBy formulation paid a full
-    (doc_id, hash) exchange and, worse, re-ran under every self-join
-    consumer). The DuckDB oracle keeps the unnest + GROUP BY form: same
-    values, independent evaluation path.
-    """
-    hashed = shingles_df(docs).select(
-        "doc_id",
-        F.expr(f"transform(shingles, sh -> {_SPARK_H32})").alias("hs"),
-    )
-    folded = hashed.select("doc_id", F.expr(_sig_fold_sql(num_perm)).alias("ms"))
-    return folded.select(
-        "doc_id", *[F.col("ms")[i].alias(f"m{i}") for i in range(num_perm)]
-    )
-
-
-def _band_digest(band: int, rows_per_band: int = ROWS_PER_BAND) -> Column:
-    """Pack the band's signature rows into ONE bigint: with m < P < 2^31
-    and rows_per_band = 2, m_a * P + m_b < 2^62 — a lossless (injective)
-    digest, so bucket membership is EXACTLY row-equality, and the bucket
-    shuffle keys on 8 bytes instead of a 32-byte md5 hex string (which
-    also cost one md5 per doc-band). The digest never leaves the plan —
-    the op's output is candidate pairs — so the oracle's md5 form and
-    this packed form group identically."""
-    assert rows_per_band == 2, "64-bit packing holds for 2 rows/band"
-    a = F.col(f"m{band * rows_per_band}")
-    b = F.col(f"m{band * rows_per_band + 1}")
-    return a * F.lit(P).cast("bigint") + b
-
-
-def lsh_candidates(
-    sig: DataFrame,
-    num_bands: int = NUM_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) sharing >=1 band digest.
-    ``num_bands``/``rows_per_band`` tune the LSH S-curve (more bands =
-    higher recall at lower precision); the registered queries bind the
-    oracle-matched defaults (the signature must carry
-    num_bands * rows_per_band columns).
-
-    Pairs are generated inside each (band, digest) bucket — groupBy +
-    collect_set + in-array combination — instead of self-joining the band
-    table, which would execute the entire upstream signature pipeline
-    twice and shuffle it both times. Bucket fan-out is bounded: beyond
-    true near-dups, digest collisions are ~2^-64, so collect_set stays
-    tiny; a pathological poison bucket (identical boilerplate docs) is the
-    dedup signal itself, not skew to engineer around.
-    """
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    _band_digest(b, rows_per_band).alias("digest"),
-                )
-                for b in range(num_bands)
-            ])
-        ).alias("bd"),
-    ).select("doc_id", "bd.band", "bd.digest")
-    buckets = (
-        bands.groupBy("band", "digest")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    return (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(ids, (x, i) ->
-                        transform(slice(ids, i + 2, size(ids) - i - 1),
-                                  y -> struct(x AS doc_a, y AS doc_b))))
-                    """
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-
-
 def _sql_signature_cte() -> str:
-    """DuckDB CTEs mirroring minhash_signature()."""
+    """DuckDB CTEs for the signature table sig(doc_id, m0..m{NUM_PERM-1}):
+    unnest + GROUP BY min per permutation — the same values as the
+    Spark single-fold chain (_spark_sig_cte), by an independent path."""
     mins = ",\n               ".join(
         f"min(({a} * h + {b}) % {P}) AS m{i}" for i, (a, b) in enumerate(COEFFS)
     )
@@ -247,12 +159,11 @@ def _sql_band_exprs() -> str:
 _SIG_SAMPLE_COLS = ["m0", "m1", "m7", "m15", "m31"]
 
 # --- Spark-SQL single-statement forms ----------------------------------------
-# The registered queries below go through ONE spark.sql() call instead of
-# the Column-builder functions above: building the ~50-expression pipeline
-# through the DataFrame API costs ~0.5 s of py4j round-trips and
-# per-F.expr parses on every invocation, while a single SQL parse is
-# O(10 ms). The Column builders stay — tests and composite operators
-# (cluster.py) reuse them — and both forms produce the identical plan.
+# The registered queries below go through ONE spark.sql() call: building
+# the ~50-expression pipeline through the DataFrame API costs ~0.5 s of
+# py4j round-trips and per-F.expr parses on every invocation, while a
+# single SQL parse is O(10 ms). shingles_df above is the DataFrame form
+# of the shg CTE, kept for dedup/jaccard.py's exact-Jaccard operator.
 
 _SPARK_SHINGLE_CASE = """
     CASE WHEN size(toks) < 3
@@ -269,8 +180,10 @@ _SPARK_SHINGLE_CASE = """
 
 
 def _spark_sig_cte(src: str) -> str:
-    """Spark-dialect CTE chain mirroring minhash_signature() exactly
-    (same single-fold construction, _sig_fold_sql)."""
+    """Spark-dialect CTE chain tok -> shg -> hsx -> sigf -> sig: the
+    shingle set per doc, its 32-bit md5-prefix hashes, then all NUM_PERM
+    permutation mins from ONE aggregate() fold (_sig_fold_sql) — the
+    signature stage is a shuffle-free map. sig exposes m0..m{NUM_PERM-1}."""
     mins = ", ".join(f"ms[{i}] AS m{i}" for i in range(NUM_PERM))
     return f"""
         tok AS (SELECT doc_id, {_SPARK_TOKS} AS toks FROM {src}),
@@ -282,8 +195,11 @@ def _spark_sig_cte(src: str) -> str:
 
 
 def _spark_bands_cte() -> str:
-    # packed-bigint digest, same contract as _band_digest (injective for
-    # m < P, 2 rows/band; never leaves the plan)
+    # band digest = the band's two signature rows packed into ONE bigint:
+    # m < P < 2^31, so m_a * P + m_b < 2^62 is lossless (injective) and
+    # bucket membership is exactly row-equality; the shuffle keys on 8
+    # bytes. The digest never leaves the plan (the output is candidate
+    # pairs), so the oracle's md5 form groups identically.
     assert ROWS_PER_BAND == 2, "64-bit packing holds for 2 rows/band"
     structs = ", ".join(
         f"named_struct('band', {b}, 'digest', "

@@ -261,8 +261,10 @@ def mg_heavy_hitters(items: DataFrame, capacity: int, support: float) -> DataFra
     # rule deduplicates the pass at runtime — an eager localCheckpoint
     # here (tried in r11) only added a materialization job and measured
     # a driver-confirmed -15% with no saved execution. Left on the
-    # optimizer: the parity suite pins the result, so a ReuseExchange
-    # regression would surface as a count mismatch, not silence.
+    # optimizer. The parity suite does not guard the reuse: re-running
+    # the deterministic MG pass yields identical counts, so a
+    # ReuseExchange regression only shows as time — in the bench and as
+    # a repeated source scan in scripts/plan_sweep.py's scan counts.
     agg = partials.groupBy("item").agg(F.sum("cnt").alias("est_count"))
     total = agg.where(F.col("item").isNull()).select(F.col("est_count").alias("n"))
     merged = agg.where(F.col("item").isNotNull())

@@ -92,7 +92,7 @@ def load_table_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _VIEW_CACHE: dict[str, SparkSession] = {}
 
 
-def star_view(spark: SparkSession, sf_dir: str, name: str, fanned: bool = False) -> str:
+def star_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Register (once per session+sf_dir) a temp view of one star table and
     return its name, for use inside single-statement spark.sql() queries."""
     # unconditionally, not just on the registration miss: a cached view
@@ -100,16 +100,9 @@ def star_view(spark: SparkSession, sf_dir: str, name: str, fanned: bool = False)
     # session timezone (timestamp literals, output rendering) — a caller
     # that re-poisoned the session between queries must still get UTC
     ensure_engine_conf(spark)
-    view = (
-        "__star_"
-        + ("f_" if fanned else "")
-        + name
-        + "_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir)
-    )
+    view = "__star_" + name + "_" + "".join(c if c.isalnum() else "_" for c in sf_dir)
     if _VIEW_CACHE.get(view) is not spark:
-        df = load_table_fanned(spark, sf_dir, name) if fanned else load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(view)
+        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
         _VIEW_CACHE[view] = spark
     return view
 

@@ -45,6 +45,7 @@ _COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderdate", "o_orderpriority"]
 
 _EXACT_STAT_TYPES = {"INT32", "INT64"}  # footer min/max exact by spec
+_PLAIN_INT_LOGICAL = {"NONE", "INT"}
 
 
 def _source_max_int(sf_dir: str, table: str, col: str) -> int | None:
@@ -53,8 +54,12 @@ def _source_max_int(sf_dir: str, table: str, col: str) -> int | None:
     exact-by-spec argument as txn_table._pk_stats). Returns None (and
     the caller falls back to a Spark max-scan) when the source is not
     the single-file layout, the column is not integer-typed, or any
-    row group lacks stats. None is also the correct answer for an
-    empty table: zero row groups yield no max."""
+    row group lacks stats. Integer-typed means an INT32/INT64 physical
+    column with no logical type or a plain Int one: a DATE's statistic
+    is a datetime.date and a DECIMAL's is unscaled. An unreadable
+    footer (no parquet magic, truncated: pyarrow's ArrowInvalid is a
+    ValueError) also falls back. None is also the correct answer for
+    an empty table: zero row groups yield no max."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{table}.parquet")
@@ -62,12 +67,16 @@ def _source_max_int(sf_dir: str, table: str, col: str) -> int | None:
         return None
     try:
         md = pq.read_metadata(path)
-    except OSError:
+    except (OSError, ValueError):
         return None
     idx = None
     for i in range(len(md.schema)):
         c = md.schema.column(i)
-        if c.name == col and c.physical_type in _EXACT_STAT_TYPES:
+        if (
+            c.name == col
+            and c.physical_type in _EXACT_STAT_TYPES
+            and c.logical_type.type in _PLAIN_INT_LOGICAL
+        ):
             idx = i
             break
     if idx is None:

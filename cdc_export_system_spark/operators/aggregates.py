@@ -1320,12 +1320,11 @@ def agg_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the totals (total_suffix below) — without it the lineitem
     # scan + groupBy would run twice
     g = g.localCheckpoint(eager=True)
-    # window impl, not arrow_impl: measured at sf0.1/local the in-memory
-    # axis re-exchange beats the Arrow boundary (see ranks.with_prefix_sum
-    # and OPTIMIZATION_r11.md); flip on clusters where the axis shuffle
-    # crosses a network. total_suffix rides the grand total on the
-    # offsets broadcast — no separate 1-row aggregate + crossJoin job
-    # (r12 A/B: fused form faster at sf0.1).
+    # The prefix sum's in-range window re-exchanges the axis; measured
+    # at sf0.1/local that in-memory re-exchange beat a partition-local
+    # Arrow pass (OPTIMIZATION_r11.md). total_suffix rides the grand
+    # total on the offsets broadcast — no separate 1-row aggregate +
+    # crossJoin job (r12 A/B: fused form faster at sf0.1).
     sel = (
         with_prefix_sum(
             g, [F.asc("v")], ["cnt"], suffix="_before",

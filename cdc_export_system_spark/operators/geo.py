@@ -129,14 +129,11 @@ def geo_cell_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def near_join_plan(p: DataFrame, verify: bool = True) -> DataFrame:
+def near_join_plan(p: DataFrame) -> DataFrame:
     """The cell-blocked radius self-join over ANY (point_id, lat_u,
     lon_u) DataFrame — shared by the registered query and the scale
     probes (scripts/probe_geo_scale.py), so what the probes measure is
-    exactly the shipped plan. ``verify=False`` is a PROBE-ONLY knob:
-    it skips the exact distance/id residual filter so the probes can
-    count the raw CANDIDATE volume the blocking admits (the join's
-    true cost driver); every registered query runs with verify=True."""
+    exactly the shipped plan."""
     a = p.select(
         F.col("point_id").alias("id_a"),
         F.col("lat_u").alias("lat_a"),
@@ -171,14 +168,12 @@ def near_join_plan(p: DataFrame, verify: bool = True) -> DataFrame:
     # corpus actually is small (as at test SF). Cheap |Δ| rejects run
     # before the two multiplies.
     joined = a9.join(b, ["cell_lat", "cell_lon"])
-    if verify:
-        joined = joined.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(dlat) <= RADIUS)
-            & (F.abs(dlon) <= RADIUS)
-            & (d2 <= R2)
-        )
-    return joined.select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+    return joined.filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.abs(dlat) <= RADIUS)
+        & (F.abs(dlon) <= RADIUS)
+        & (d2 <= R2)
+    ).select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
 
 
 @register(
@@ -256,7 +251,6 @@ def near_join_salted_plan(
     p: DataFrame,
     hot_t: int = HOT_CELL_T,
     n_salt: int = N_SALT,
-    verify: bool = True,
 ) -> DataFrame:
     """Salted form of near_join_plan over ANY point DataFrame; hot_t /
     n_salt are exposed for the skew probes (the registered query pins
@@ -309,14 +303,12 @@ def near_join_salted_plan(
     dlon = F.col("lon_a") - F.col("lon_b")
     d2 = dlat * dlat + dlon * dlon
     joined = a9.join(b_salted, ["cell_lat", "cell_lon", "salt"])
-    if verify:
-        joined = joined.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(dlat) <= RADIUS)
-            & (F.abs(dlon) <= RADIUS)
-            & (d2 <= R2)
-        )
-    return joined.select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+    return joined.filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.abs(dlat) <= RADIUS)
+        & (F.abs(dlon) <= RADIUS)
+        & (d2 <= R2)
+    ).select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
 
 
 # adaptive refinement thresholds: cells below SPLIT_T points stay
@@ -369,17 +361,11 @@ def geo_near_join_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_join_adaptive_plan(points(spark, sf_dir))
 
 
-def near_join_adaptive_plan(
-    p: DataFrame, split_t: int = SPLIT_T, verify: bool = True
-) -> DataFrame:
+def near_join_adaptive_plan(p: DataFrame, split_t: int = SPLIT_T) -> DataFrame:
     """Adaptive (density-gated tile-refined) form of near_join_plan
     over ANY point DataFrame; split_t is exposed for the skew probes
     (cells < split_t points stay level 0; < 4*split_t refine 2x2;
-    above that 4x4). With verify=False (probe-only) the exact residual
-    filter is skipped but the tile box-intersection PRUNING stays: it
-    is part of the blocking, and its candidate savings are exactly
-    what the probe measures against the fixed grid and the salted
-    variant."""
+    above that 4x4)."""
     # census -> per-cell tile grid width nside in {1, 2, 4}
     cells = (
         p.groupBy(
@@ -462,14 +448,12 @@ def near_join_adaptive_plan(
     dlon = F.col("lon_a") - F.col("lon_b")
     d2 = dlat * dlat + dlon * dlon
     joined = a9.join(b, ["cell_lat", "cell_lon", "sub"])
-    if verify:
-        joined = joined.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(dlat) <= RADIUS)
-            & (F.abs(dlon) <= RADIUS)
-            & (d2 <= R2)
-        )
-    return joined.select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+    return joined.filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.abs(dlat) <= RADIUS)
+        & (F.abs(dlon) <= RADIUS)
+        & (d2 <= R2)
+    ).select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
 
 
 @register(
@@ -590,15 +574,11 @@ def knn_ring_plan(
     spark: SparkSession,
     p: DataFrame,
     probes: DataFrame,
-    counters: list | None = None,
 ) -> DataFrame:
     """The fixed-grid expanding-ring exact-kNN loop over ANY point /
     probe DataFrames — shared by the registered query and the hotspot
     probes (scripts/probe_knn_hotspot.py), so what the probes measure
-    is exactly the shipped plan. ``counters`` is PROBE-ONLY: when a
-    list is passed, each ring appends its admitted candidate-row count
-    (one extra count() action per ring); registered queries pass
-    None."""
+    is exactly the shipped plan."""
     corpus = p.withColumn("cell_lat", F.floor(F.col("lat_u") / CELL)).withColumn(
         "cell_lon", F.floor(F.col("lon_u") / CELL)
     )
@@ -664,8 +644,6 @@ def knn_ring_plan(
                 d2.cast("bigint").alias("dist2"),
             )
         )
-        if counters is not None:
-            counters.append(cand.count())
         pool = cand if best is None else best.drop("rk").unionByName(cand)
         w = W.partitionBy("probe_id").orderBy("dist2", "neighbor_id")
         topk = (
@@ -770,7 +748,6 @@ def knn_adaptive_plan(
     p: DataFrame,
     probes: DataFrame,
     split_t: int = SPLIT_T,
-    counters: list | None = None,
 ) -> DataFrame:
     """The adaptive-tile expanding-ring exact-kNN loop over ANY point /
     probe DataFrames; split_t gates which cells refine (the hotspot
@@ -901,8 +878,6 @@ def knn_adaptive_plan(
                 d2.cast("bigint").alias("dist2"),
             )
         )
-        if counters is not None:
-            counters.append(cand.count())
         pool = cand if best is None else best.drop("rk").unionByName(cand)
         w = W.partitionBy("probe_id").orderBy("dist2", "neighbor_id")
         topk = (

@@ -138,9 +138,7 @@ def _join_term(orders_part: DataFrame, li_part: DataFrame) -> DataFrame:
     headline=True,
     tags=("mv", "join", "agg"),
 )
-def mv_delta_join(
-    spark: SparkSession, sf_dir: str, pin_inputs: bool = False
-) -> DataFrame:
+def mv_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a join view under deltas on BOTH
     inputs: V(O_old + dO, L_old + dL) = term(O_old,L_old) + term(dO,
     L_old) + term(O_old,dL) + term(dO,dL) — the bilinear expansion
@@ -150,25 +148,18 @@ def mv_delta_join(
     with one final decimal merge. The oracle joins and aggregates the
     FULL inputs in one shot — the hash proves the expansion + state
     merge are exact, bit-for-bit, under the dmulsum discipline."""
-    # ``pin_inputs``: materialize each projected side ONCE instead of
-    # letting the four bilinear terms re-scan the same parquet (the
-    # harness derives the old/delta splits from one table; deployed IVM
-    # reads genuinely separate delta inputs once each). Default OFF —
-    # the pin was tried as the default in r11 and the driver measured
-    # it -22% at bench scale: two eager data-sized materializations
-    # cost more than six column-pruned local parquet scans. Flip it on
-    # clusters where the term inputs are remote full re-scans — the
-    # same measured-crossover discipline as ranks.with_prefix_sum's
-    # ``arrow_impl``.
+    # The four bilinear terms re-scan the same parquet (the harness
+    # derives the old/delta splits from one table; deployed IVM reads
+    # genuinely separate delta inputs once each). Not pinned: pinning
+    # each projected side once was tried as the default in r11 and it
+    # measured -22% at bench scale — two eager data-sized
+    # materializations cost more than six column-pruned local scans.
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    if pin_inputs:
-        o = o.localCheckpoint(eager=True)
-        li = li.localCheckpoint(eager=True)
     o_old = o.filter(F.col("o_orderkey") % 4 != 0)
     d_o = o.filter(F.col("o_orderkey") % 4 == 0)
     l_old = li.filter(F.col("l_orderkey") % 5 != 0)

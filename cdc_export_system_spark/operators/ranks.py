@@ -39,28 +39,6 @@ _RN_IN = "__rn_in_range"
 _OFFSET = "__range_offset"
 
 
-def _arrow_rownum_gen(out_name: str):
-    """mapInArrow generator: 1-based per-partition row number appended
-    as ``out_name`` (int64), carry threaded across batches — the Arrow
-    sibling of row_number() OVER (PARTITION BY range id)."""
-
-    def gen(it):
-        import numpy as np
-        import pyarrow as pa
-
-        carry = 0
-        for b in it:
-            n = b.num_rows
-            rn = np.arange(carry + 1, carry + n + 1, dtype=np.int64)
-            carry += n
-            yield pa.RecordBatch.from_arrays(
-                list(b.columns) + [pa.array(rn, type=pa.int64())],
-                names=list(b.schema.names) + [out_name],
-            )
-
-    return gen
-
-
 def with_global_row_number(
     df: DataFrame,
     order_cols: list[Column],
@@ -68,7 +46,6 @@ def with_global_row_number(
     total_out: str | None = None,
     num_partitions: int | None = None,
     materialize: bool = True,
-    arrow_impl: bool = False,
 ) -> DataFrame:
     """Add a 1-based global row number ``out`` over the total order given
     by ``order_cols`` (use F.asc/F.desc columns; include a unique
@@ -81,16 +58,7 @@ def with_global_row_number(
     whole upstream subtree evaluates twice — and chained constructions
     (rfm_segmentation's three ranks) compound exponentially (16 source
     scans at the round-3 audit). Callers passing an already-materialized
-    frame set it False.
-
-    ``arrow_impl``: number rows with a partition-local Arrow pass
-    (sortWithinPartitions + mapInArrow counter) instead of the window —
-    deletes the second full-axis hash exchange the window pays because
-    Catalyst cannot see that range partitions already cluster
-    spark_partition_id(). Same opt-in contract and measured local-mode
-    verdict as with_prefix_sum's arrow_impl (r12 A/B: window form wins
-    at sf0.1 AND at 25x on local[32] — the axis re-exchange is
-    memory-speed; flip only where it crosses a network)."""
+    frame set it False."""
     if materialize:
         df = df.localCheckpoint(eager=True)
     parted = (
@@ -99,21 +67,9 @@ def with_global_row_number(
         else df.repartitionByRange(*order_cols)
     )
 
-    if arrow_impl:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(_RN_IN, LongType(), False)]
-        )
-        numbered = parted.sortWithinPartitions(*order_cols).mapInArrow(
-            _arrow_rownum_gen(_RN_IN), schema=out_schema
-        )
-        parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
-        numbered = numbered.withColumn(_RANGE_ID, F.spark_partition_id())
-    else:
-        parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
-        w_in = W.partitionBy(_RANGE_ID).orderBy(*order_cols)
-        numbered = parted.withColumn(_RN_IN, F.row_number().over(w_in))
+    parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
+    w_in = W.partitionBy(_RANGE_ID).orderBy(*order_cols)
+    numbered = parted.withColumn(_RN_IN, F.row_number().over(w_in))
 
     counts = parted.groupBy(_RANGE_ID).agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = W.orderBy(_RANGE_ID).rowsBetween(W.unboundedPreceding, -1)
@@ -130,56 +86,6 @@ def with_global_row_number(
     return result.drop(_RANGE_ID, _RN_IN, _OFFSET, "__total")
 
 
-def _arrow_cummax_gen(value: str, out_name: str, kind: str):
-    """mapInArrow generator: EXCLUSIVE per-partition running max of
-    ``value`` appended as ``out_name`` (same numeric family as the
-    input — the window F.max keeps the value's type), carry threaded
-    across batches; the partition's first row gets null, matching the
-    ROWS UNBOUNDED PRECEDING..-1 frame. Non-null inputs only (the
-    window impl skips nulls; this one raises loudly, same contract as
-    the cumsum generator)."""
-
-    def gen(it):
-        import numpy as np
-        import pyarrow as pa
-
-        np_t = np.int64 if kind == "i" else np.float64
-        pa_t = pa.int64() if kind == "i" else pa.float64()
-        carry = None  # running max BEFORE the current batch
-        for b in it:
-            cols = list(b.columns)
-            names = list(b.schema.names)
-            x = b.column(names.index(value))
-            if x.null_count:
-                raise ValueError(
-                    f"with_prefix_max(arrow_impl): null in {value} — the "
-                    "window impl skips nulls; pass non-null columns here"
-                )
-            arr = x.to_numpy(zero_copy_only=False).astype(np_t, copy=False)
-            n = len(arr)
-            if n == 0:
-                cols.append(pa.array([], type=pa_t))
-                yield pa.RecordBatch.from_arrays(
-                    cols, names=names + [out_name]
-                )
-                continue
-            cm = np.maximum.accumulate(arr)
-            excl = np.empty(n, dtype=np_t)
-            excl[1:] = cm[:-1]
-            mask = np.zeros(n, dtype=bool)
-            if carry is None:
-                mask[0] = True  # global/partition first row: NULL
-                excl[0] = arr[0]  # placeholder under the mask
-            else:
-                excl[0] = carry
-                np.maximum(excl, carry, out=excl)
-            carry = cm[-1] if carry is None else max(carry, cm[-1])
-            cols.append(pa.array(excl, type=pa_t, mask=mask))
-            yield pa.RecordBatch.from_arrays(cols, names=names + [out_name])
-
-    return gen
-
-
 def with_prefix_max(
     df: DataFrame,
     order_cols: list[Column],
@@ -187,7 +93,6 @@ def with_prefix_max(
     out: str = "prefix_max",
     num_partitions: int | None = None,
     materialize: bool = True,
-    arrow_impl: bool = False,
 ) -> DataFrame:
     """Add the EXCLUSIVE running max of ``value`` over the total order
     given by ``order_cols`` (NULL for the global first row) — the
@@ -206,15 +111,6 @@ def with_prefix_max(
     ordering of equal keys yields the same running maximum once the
     value column is part of the key set. ``materialize`` as in
     :func:`with_global_row_number` — one upstream evaluation, not two.
-
-    ``arrow_impl``: the within-range running max as a partition-local
-    Arrow pass instead of the range-id window — same opt-in contract,
-    null discipline and measured local-mode verdict as
-    with_prefix_sum's arrow_impl (window form wins on local[32] at
-    sf0.1 and 25x; see OPTIMIZATION_r12.md). Requires a non-null
-    int/float value column; the running max is emitted as int64/float64
-    (the window form keeps the exact input type — callers flipping
-    this on narrower types get a widened column).
     """
     if materialize:
         df = df.localCheckpoint(eager=True)
@@ -224,37 +120,13 @@ def with_prefix_max(
         else df.repartitionByRange(*order_cols)
     )
 
-    if arrow_impl:
-        types = dict(df.dtypes)
-        if types[value] in _INT_TYPES:
-            kind = "i"
-        elif types[value] in _FLOAT_TYPES:
-            kind = "f"
-        else:
-            raise ValueError(
-                f"arrow_impl supports int/float values, got {value}: "
-                f"{types[value]}"
-            )
-        from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-        out_schema = StructType(
-            list(df.schema.fields)
-            + [StructField("__within_excl",
-                           LongType() if kind == "i" else DoubleType(), True)]
-        )
-        within = parted.sortWithinPartitions(*order_cols).mapInArrow(
-            _arrow_cummax_gen(value, "__within_excl", kind), schema=out_schema
-        )
-        parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
-        within = within.withColumn(_RANGE_ID, F.spark_partition_id())
-    else:
-        parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
-        w_in = (
-            W.partitionBy(_RANGE_ID)
-            .orderBy(*order_cols)
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        within = parted.withColumn("__within_excl", F.max(value).over(w_in))
+    parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
+    w_in = (
+        W.partitionBy(_RANGE_ID)
+        .orderBy(*order_cols)
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    within = parted.withColumn("__within_excl", F.max(value).over(w_in))
 
     rmax = parted.groupBy(_RANGE_ID).agg(F.max(value).alias("__rmax"))
     w_off = W.orderBy(_RANGE_ID).rowsBetween(W.unboundedPreceding, -1)
@@ -286,67 +158,6 @@ def ntile_from_rank(rn: Column, n: Column, k: int) -> Column:
     return F.when(rn <= cut, first).otherwise(rest).cast("int")
 
 
-def _arrow_cumsum_gen(values: list[str], out_names: list[str], kinds: list[str]):
-    """mapInArrow generator: EXCLUSIVE per-partition running sums of
-    ``values`` appended as ``out_names`` (int64 for integral inputs,
-    float64 for floating — matching Spark's sum() result types), with
-    the carry threaded across batches so one pass covers the whole
-    partition. Sequential left-to-right accumulation, i.e. exactly the
-    order the ROWS-frame window sum uses."""
-
-    def gen(it):
-        import numpy as np
-        import pyarrow as pa
-
-        carry = [0] * len(values)
-        for b in it:
-            cols = list(b.columns)
-            names = list(b.schema.names)
-            for j, v in enumerate(values):
-                x = b.column(names.index(v))
-                if x.null_count:
-                    raise ValueError(
-                        f"with_prefix_sum(arrow_impl): null in {v} — the "
-                        "window impl skips nulls; pass non-null columns here"
-                    )
-                # Arrow may legally deliver 0-row batches (upstream
-                # filtering / batch slicing): pass them through with
-                # the carry unchanged — excl[0] on an empty cumsum
-                # would IndexError.
-                if kinds[j] == "i":
-                    arr = x.to_numpy(zero_copy_only=False).astype(
-                        np.int64, copy=False
-                    )
-                    cs = np.cumsum(arr, dtype=np.int64)
-                    excl = np.empty_like(cs)
-                    if len(cs):
-                        excl[0] = 0
-                        excl[1:] = cs[:-1]
-                        excl += carry[j]
-                    nxt = carry[j] + (int(cs[-1]) if len(cs) else 0)
-                    cols.append(pa.array(excl, type=pa.int64()))
-                else:
-                    arr = x.to_numpy(zero_copy_only=False).astype(
-                        np.float64, copy=False
-                    )
-                    cs = np.cumsum(arr, dtype=np.float64)
-                    excl = np.empty_like(cs)
-                    if len(cs):
-                        excl[0] = 0.0
-                        excl[1:] = cs[:-1]
-                        excl += carry[j]
-                    nxt = carry[j] + (float(cs[-1]) if len(cs) else 0.0)
-                    cols.append(pa.array(excl, type=pa.float64()))
-                carry[j] = nxt
-            yield pa.RecordBatch.from_arrays(cols, names=names + out_names)
-
-    return gen
-
-
-_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
-_FLOAT_TYPES = {"float", "double"}
-
-
 def with_prefix_sum(
     df: DataFrame,
     order_cols: list[Column],
@@ -354,7 +165,6 @@ def with_prefix_sum(
     suffix: str = "_cum",
     num_partitions: int | None = None,
     materialize: bool = True,
-    arrow_impl: bool = False,
     total_suffix: str | None = None,
 ) -> DataFrame:
     """Add the EXCLUSIVE running sum of each column in ``values`` over
@@ -374,21 +184,7 @@ def with_prefix_sum(
     (last offset + last range sum), riding the same broadcast. Callers
     that previously ran a separate 1-row total aggregate + crossJoin
     per query drop that extra job entirely (measured r12: the fused
-    form beats the separate-total form on every prefix consumer).
-
-    ``arrow_impl``: the within-range running sum as a partition-local
-    Arrow pass (sortWithinPartitions + mapInArrow cumsum) instead of a
-    window PARTITIONED BY the range id. The window form needs a second
-    FULL-AXIS hash exchange purely because Catalyst cannot see that
-    range partitions already cluster spark_partition_id(); the Arrow
-    form deletes that exchange — the axis is shuffled ONCE — at the
-    price of one columnar boundary crossing. Opt-in per caller: it
-    requires NON-NULL int/float value columns (int64 accumulation
-    wraps exactly like the window sum's bigint; float accumulates in
-    the identical left-to-right order) and a narrow frame (every
-    column rides through the Arrow pass). Offsets branch unchanged —
-    same partial-agg + tiny-window + broadcast join, off the same
-    reused range exchange."""
+    form beats the separate-total form on every prefix consumer)."""
     if materialize:
         df = df.localCheckpoint(eager=True)
     parted = (
@@ -397,45 +193,17 @@ def with_prefix_sum(
         else df.repartitionByRange(*order_cols)
     )
 
-    if arrow_impl:
-        types = dict(df.dtypes)
-        kinds = []
-        for v in values:
-            if types[v] in _INT_TYPES:
-                kinds.append("i")
-            elif types[v] in _FLOAT_TYPES:
-                kinds.append("f")
-            else:
-                raise ValueError(
-                    f"arrow_impl supports int/float values, got {v}: {types[v]}"
-                )
-        from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-        out_names = [f"__within_{v}" for v in values]
-        out_schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(n, LongType() if k == "i" else DoubleType(), True)
-                for n, k in zip(out_names, kinds)
-            ]
+    parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
+    w_in = (
+        W.partitionBy(_RANGE_ID)
+        .orderBy(*order_cols)
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    within = parted
+    for v in values:
+        within = within.withColumn(
+            f"__within_{v}", F.coalesce(F.sum(v).over(w_in), F.lit(0))
         )
-        within = parted.sortWithinPartitions(*order_cols).mapInArrow(
-            _arrow_cumsum_gen(values, out_names, kinds), schema=out_schema
-        )
-        parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
-        within = within.withColumn(_RANGE_ID, F.spark_partition_id())
-    else:
-        parted = parted.withColumn(_RANGE_ID, F.spark_partition_id())
-        w_in = (
-            W.partitionBy(_RANGE_ID)
-            .orderBy(*order_cols)
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        within = parted
-        for v in values:
-            within = within.withColumn(
-                f"__within_{v}", F.coalesce(F.sum(v).over(w_in), F.lit(0))
-            )
 
     rsum = parted.groupBy(_RANGE_ID).agg(
         *[F.sum(v).alias(f"__rsum_{v}") for v in values]

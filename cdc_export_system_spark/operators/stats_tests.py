@@ -183,8 +183,8 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one events scan: totals + prefix branches read the materialized axis
     v = v.localCheckpoint(eager=True)
-    # window impl, not arrow_impl (see ranks.with_prefix_sum): at
-    # sf0.1/local the axis re-exchange is cheaper than the Arrow pass.
+    # The prefix sum's axis re-exchange is cheaper at sf0.1/local than
+    # a partition-local Arrow pass (measured, OPTIMIZATION_r11.md).
     # total_suffix: the arm totals ride the offsets broadcast — no
     # separate 1-row aggregate + crossJoin job (r12).
     c = with_prefix_sum(

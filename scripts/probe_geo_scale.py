@@ -218,29 +218,6 @@ def main() -> None:
             flush=True,
         )
 
-    # CANDIDATE VOLUME (blocking quality, independent of the join
-    # regime): rows admitted to the verify filter per variant. Salting
-    # never changes this (it only spreads the same candidates across
-    # sub-keys); the adaptive grid's quadrant box-intersection PRUNES
-    # it — the structural difference between the two skew remedies.
-    for label, cand_df in (
-        ("fixed_3x3", near_join_plan(hp, verify=False)),
-        ("salted_x16", near_join_salted_plan(hp, n_salt=16, verify=False)),
-        ("adaptive_gated",
-         near_join_adaptive_plan(hp, split_t=512, verify=False)),
-    ):
-        print(
-            json.dumps(
-                {
-                    "probe": "hot_cell_candidates",
-                    "variant": label,
-                    "copies": copies,
-                    "candidates": cand_df.count(),
-                }
-            ),
-            flush=True,
-        )
-
 
 if __name__ == "__main__":
     main()

@@ -119,17 +119,13 @@ def main() -> None:
         .head()[0]
     )
     for label, fn in (
-        ("hotspot_fixed_ring",
-         lambda c=None: knn_ring_plan(spark, hp, near, counters=c)),
+        ("hotspot_fixed_ring", lambda: knn_ring_plan(spark, hp, near)),
         ("hotspot_adaptive_gated",
-         lambda c=None: knn_adaptive_plan(spark, hp, near, split_t=512,
-                                          counters=c)),
+         lambda: knn_adaptive_plan(spark, hp, near, split_t=512)),
     ):
         timed(fn)  # warm
         w1, n = timed(fn)
         w2, _ = timed(fn)
-        counters = []
-        fn(counters).count()  # candidate volume per ring (probe-only)
         print(
             json.dumps(
                 {
@@ -137,8 +133,6 @@ def main() -> None:
                     "hot_cell_points": int(hot_n),
                     "knn_rows": n,
                     "wall_s": min(w1, w2),
-                    "rings": len(counters),
-                    "candidates": sum(counters),
                 }
             ),
             flush=True,

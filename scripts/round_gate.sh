@@ -9,6 +9,7 @@
 #   * every gate entry records the HEAD sha and whether engine paths
 #     (cdc_export_system_spark/ __spark_entry__.py tests/) were dirty;
 #   * a FINAL gate refuses to run on a dirty engine tree;
+#   * a FINAL gate also runs the full test tier (`-m "slow or not slow"`);
 #   * `round_gate.sh --check-final` exits non-zero unless the engine
 #     tree at HEAD is byte-identical to the last recorded FINAL gate —
 #     i.e. any post-gate engine commit makes the round visibly ungated
@@ -67,6 +68,11 @@ run "entry contract"       python -m pytest tests/test_entry_contract.py -q
 run "empty-input sweep"    python -m pytest tests/test_empty_inputs.py -q
 run "oracle parity sweep"  python -m pytest tests/test_oracle_parity.py -q
 run "partition sweep (5)"  python scripts/partition_sweep.py 5
+# round close only: the whole suite, including the slow tier that the
+# default `pytest tests/` run deselects (pytest.ini addopts)
+if [ "$FINAL" -eq 1 ]; then
+  run "full test tier"     python -m pytest tests/ -q -m "slow or not slow" -p no:cacheprovider
+fi
 
 MARK=""
 if [ "$FINAL" -eq 1 ] && [ "$FAILED" -eq 0 ]; then MARK=" — FINAL @ ${HEAD_SHA}"; fi

@@ -21,7 +21,7 @@ from cdc_export_system_spark.cdc.jobs import (
     start_export_job,
 )
 from cdc_export_system_spark.datagen import PINNED_NOW, generate_users
-from cdc_export_system_spark.schemas import WATERMARKS_SCHEMA
+from cdc_export_system_spark.schemas import EXPORT_COLUMNS, WATERMARKS_SCHEMA
 from cdc_export_system_spark.state.watermark import WatermarkStore
 
 N_USERS = 1_000
@@ -272,6 +272,60 @@ def test_watermark_state_ops_run_no_spark_jobs(spark, store, monkeypatch):
     # the losing commit's orphan snapshot file was deleted
     vdir = os.path.join(store.state_dir, "versions")
     assert len(os.listdir(vdir)) == len(store._chain()) == 3
+
+
+def test_multi_file_export_directory_contract(spark, users, store, tmp_path):
+    """single_file=False, the parallel sink for large extracts: a
+    directory of part files, each with the header, rows ascending by
+    updated_at across parts in name order, rowsExported equal to the
+    data lines; an empty batch writes no path and leaves the watermark
+    alone, and a re-export replaces the directory."""
+    out = str(tmp_path / "out")
+    path = os.path.join(out, "full_multi")
+
+    def data_rows():
+        names = sorted(os.listdir(path))
+        assert len(names) >= 2, names
+        assert all(n.startswith("part-") and n.endswith(".csv") for n in names), names
+        files = [read_csv(os.path.join(path, n)) for n in names]
+        assert all(f[0] == EXPORT_COLUMNS for f in files)
+        return [r for f in files for r in f[1:]]
+
+    # AQE would coalesce this small sort into one partition; a large
+    # extract has many, so keep them apart for the duration of the test
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        job = start_export_job(
+            users.repartition(4), store, "full", "multi", output_dir=out,
+            single_file=False, filename="full_multi",
+        )
+        data = data_rows()
+        assert job["rowsExported"] == len(data) == users.filter(~F.col("is_deleted")).count()
+        updated = [datetime.fromisoformat(r[4]) for r in data]
+        assert updated == sorted(updated)
+
+        wm = store.get("multi")
+        job = start_export_job(
+            users.repartition(4), store, "incremental", "multi", output_dir=out,
+            single_file=False, filename="inc_multi",
+        )
+        assert job["rowsExported"] == 0
+        assert not os.path.exists(os.path.join(out, "inc_multi"))
+        assert store.get("multi") == wm
+
+        half = users.filter(F.col("id") % 2 == 0).repartition(4)
+        job = start_export_job(
+            half, store, "full", "multi", output_dir=out,
+            single_file=False, filename="full_multi",
+        )
+        data = data_rows()
+        assert job["rowsExported"] == len(data) == half.filter(~F.col("is_deleted")).count()
+        assert {int(r[0]) % 2 for r in data} == {0}
+        assert os.listdir(out) == ["full_multi"]  # no staging dirs left behind
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_failed_job_leaves_no_state(spark, users, store, tmp_path):

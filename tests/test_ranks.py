@@ -70,23 +70,40 @@ def test_spark_ntile_from_rank_matches_sql_ntile(spark):
 
 
 def test_prefix_max_matches_naive_global_window(spark):
+    """Value-identical to the naive partition-less window, NULL for the
+    global first row, and the input value type kept (int, double and
+    bigint)."""
     from cdc_export_system_spark.operators.ranks import with_prefix_max
 
-    df = spark.createDataFrame(
-        [((i * 17) % 41, (i * 7) % 23, i) for i in range(300)], "x int, y int, id int"
-    ).repartition(7)
-    got = with_prefix_max(df, [F.desc("x"), F.desc("y"), F.asc("id")], "y", out="pm")
-    ref = df.withColumn(
-        "pm_ref",
-        F.max("y").over(
-            W.orderBy(F.desc("x"), F.desc("y"), F.asc("id")).rowsBetween(
-                W.unboundedPreceding, -1
-            )
+    cases = [
+        (
+            [((i * 17) % 41, (i * 7) % 23, i) for i in range(300)],
+            "x int, y int, id int",
+            [F.desc("x"), F.desc("y"), F.asc("id")],
         ),
-    )
-    rows = got.join(ref, ["x", "y", "id"]).select("pm", "pm_ref").collect()
-    assert len(rows) == 300
-    assert all(r.pm == r.pm_ref for r in rows)
+        (
+            [((i * 13) % 37, float((i * 7) % 23) / 4, i) for i in range(300)],
+            "x int, y double, id int",
+            [F.asc("x"), F.asc("id")],
+        ),
+        (
+            [((i * 13) % 37, (i * 7) % 23 + (1 << 40), i) for i in range(300)],
+            "x int, y bigint, id int",
+            [F.desc("x"), F.asc("id")],
+        ),
+    ]
+    for rows, schema, order in cases:
+        df = spark.createDataFrame(rows, schema).repartition(7)
+        got = with_prefix_max(df, order, "y", out="pm")
+        assert dict(got.dtypes)["pm"] == dict(df.dtypes)["y"], schema
+        ref = df.withColumn(
+            "pm_ref",
+            F.max("y").over(W.orderBy(*order).rowsBetween(W.unboundedPreceding, -1)),
+        )
+        out = got.join(ref, ["x", "y", "id"]).select("pm", "pm_ref").collect()
+        assert len(out) == 300, schema
+        assert all(r.pm == r.pm_ref for r in out), schema
+        assert sum(r.pm is None for r in out) == 1, schema
 
 
 def test_prefix_max_empty_input(spark):
@@ -97,22 +114,38 @@ def test_prefix_max_empty_input(spark):
 
 
 def test_prefix_sum_matches_naive_global_window(spark):
+    """Identical to the naive partition-less window: int, bigint and
+    double values (the double inputs are quarter-steps, so every partial
+    sum is exact in any association order), asc and desc first keys."""
     from cdc_export_system_spark.operators.ranks import with_prefix_sum
 
-    df = spark.createDataFrame(
-        [((i * 13) % 37, (i * 5) % 11 + 1, i % 3, i) for i in range(300)],
-        "k int, a int, b int, id int",
-    ).repartition(7)
-    got = with_prefix_sum(df, [F.asc("k"), F.asc("id")], ["a", "b"], suffix="_c")
-    w = W.orderBy(F.asc("k"), F.asc("id")).rowsBetween(W.unboundedPreceding, -1)
-    ref = df.withColumn("a_ref", F.coalesce(F.sum("a").over(w), F.lit(0))).withColumn(
-        "b_ref", F.coalesce(F.sum("b").over(w), F.lit(0))
-    )
-    rows = got.join(ref, ["k", "a", "b", "id"]).select(
-        "a_c", "a_ref", "b_c", "b_ref"
-    ).collect()
-    assert len(rows) == 300
-    assert all(r.a_c == r.a_ref and r.b_c == r.b_ref for r in rows)
+    cases = [
+        (
+            [((i * 13) % 37, (i * 5) % 11 + 1, i % 3, i) for i in range(300)],
+            "k int, a int, b int, id int",
+            [F.asc("k"), F.asc("id")],
+        ),
+        (
+            [
+                ((i * 13) % 37, (i * 5) % 11 + 1, float((i * 7) % 13) / 4, i)
+                for i in range(300)
+            ],
+            "k int, a bigint, b double, id int",
+            [F.desc("k"), F.asc("id")],
+        ),
+    ]
+    for rows, schema, order in cases:
+        df = spark.createDataFrame(rows, schema).repartition(7)
+        got = with_prefix_sum(df, order, ["a", "b"], suffix="_c")
+        w = W.orderBy(*order).rowsBetween(W.unboundedPreceding, -1)
+        ref = df.withColumn(
+            "a_ref", F.coalesce(F.sum("a").over(w), F.lit(0))
+        ).withColumn("b_ref", F.coalesce(F.sum("b").over(w), F.lit(0)))
+        out = got.join(ref, ["k", "a", "b", "id"]).select(
+            "a_c", "a_ref", "b_c", "b_ref"
+        ).collect()
+        assert len(out) == 300, schema
+        assert all(r.a_c == r.a_ref and r.b_c == r.b_ref for r in out), schema
 
 
 def test_prefix_sum_empty_input(spark):
@@ -120,138 +153,3 @@ def test_prefix_sum_empty_input(spark):
 
     df = spark.createDataFrame([], "k int, a int")
     assert with_prefix_sum(df, [F.asc("k")], ["a"]).count() == 0
-
-
-def test_prefix_sum_arrow_impl_matches_window_impl(spark):
-    """The Arrow cumsum path (one axis shuffle + mapInArrow) must be
-    row-identical to the window path it replaces — multi-column, int
-    AND float values, desc order, across partition boundaries."""
-    from cdc_export_system_spark.operators.ranks import with_prefix_sum
-
-    df = spark.createDataFrame(
-        [
-            ((i * 13) % 37, (i * 5) % 11 + 1, float((i * 7) % 13) / 4, i)
-            for i in range(300)
-        ],
-        "k int, a bigint, x double, id int",
-    ).repartition(7)
-    order = [F.desc("k"), F.asc("id")]
-    win = with_prefix_sum(df, order, ["a", "x"], suffix="_c")
-    arw = with_prefix_sum(df, order, ["a", "x"], suffix="_c", arrow_impl=True)
-    rows = (
-        win.withColumnRenamed("a_c", "a_w")
-        .withColumnRenamed("x_c", "x_w")
-        .join(arw, ["k", "a", "x", "id"])
-        .select("a_w", "a_c", "x_w", "x_c")
-        .collect()
-    )
-    assert len(rows) == 300
-    assert all(r.a_w == r.a_c and r.x_w == r.x_c for r in rows)
-
-
-def test_prefix_sum_arrow_impl_empty_and_guards(spark):
-    from cdc_export_system_spark.operators.ranks import with_prefix_sum
-    import pytest
-
-    empty = spark.createDataFrame([], "k int, a bigint")
-    assert with_prefix_sum(empty, [F.asc("k")], ["a"], arrow_impl=True).count() == 0
-
-    # non-numeric value column: loud build-time error, not wrong sums
-    s = spark.createDataFrame([(1, "x")], "k int, a string")
-    with pytest.raises(ValueError, match="arrow_impl supports"):
-        with_prefix_sum(s, [F.asc("k")], ["a"], arrow_impl=True)
-
-    # nulls: loud runtime error (the window impl would skip them)
-    n = spark.createDataFrame([(1, 1), (2, None)], "k int, a int")
-    bad = with_prefix_sum(n, [F.asc("k")], ["a"], arrow_impl=True)
-    with pytest.raises(Exception, match="null in a"):
-        bad.collect()
-
-
-def test_row_number_arrow_impl_matches_window_impl(spark):
-    """The Arrow row-number path must be rank-identical to the window
-    path — desc order, unique tie-break, across partition boundaries,
-    total_out included."""
-    from cdc_export_system_spark.operators.ranks import with_global_row_number
-
-    df = spark.createDataFrame(
-        [((i * 13) % 37, i) for i in range(300)], "k int, id int"
-    ).repartition(7)
-    order = [F.desc("k"), F.asc("id")]
-    win = with_global_row_number(df, order, out="rn", total_out="n")
-    arw = with_global_row_number(df, order, out="rn_a", total_out="n_a",
-                                 arrow_impl=True)
-    rows = win.join(arw, ["k", "id"]).select("rn", "rn_a", "n", "n_a").collect()
-    assert len(rows) == 300
-    assert all(r.rn == r.rn_a and r.n == r.n_a == 300 for r in rows)
-
-
-def test_prefix_max_arrow_impl_matches_window_impl(spark):
-    """The Arrow cummax path must be value-identical to the window path
-    (cast to the Arrow path's widened type), including the global-first
-    NULL, int and float, across partition boundaries."""
-    from cdc_export_system_spark.operators.ranks import with_prefix_max
-
-    df = spark.createDataFrame(
-        [((i * 13) % 37, (i * 7) % 23, i) for i in range(300)],
-        "k int, x bigint, id int",
-    ).repartition(7)
-    order = [F.asc("k"), F.asc("id")]
-    win = with_prefix_max(df, order, "x", out="pm")
-    arw = with_prefix_max(df, order, "x", out="pm_a", arrow_impl=True)
-    rows = win.join(arw, ["k", "x", "id"]).select("pm", "pm_a").collect()
-    assert len(rows) == 300
-    assert all(
-        (r.pm is None and r.pm_a is None) or int(r.pm) == int(r.pm_a)
-        for r in rows
-    )
-
-    fdf = spark.createDataFrame(
-        [((i * 13) % 37, float((i * 7) % 23) / 4, i) for i in range(100)],
-        "k int, x double, id int",
-    ).repartition(5)
-    win = with_prefix_max(fdf, order, "x", out="pm")
-    arw = with_prefix_max(fdf, order, "x", out="pm_a", arrow_impl=True)
-    rows = win.join(arw, ["k", "x", "id"]).select("pm", "pm_a").collect()
-    assert all(
-        (r.pm is None and r.pm_a is None) or r.pm == r.pm_a for r in rows
-    )
-
-
-def test_prefix_max_arrow_impl_guards(spark):
-    from cdc_export_system_spark.operators.ranks import with_prefix_max
-    import pytest
-
-    s = spark.createDataFrame([(1, "x")], "k int, a string")
-    with pytest.raises(ValueError, match="arrow_impl supports"):
-        with_prefix_max(s, [F.asc("k")], "a", arrow_impl=True)
-
-    n = spark.createDataFrame([(1, 1), (2, None)], "k int, a int")
-    bad = with_prefix_max(n, [F.asc("k")], "a", arrow_impl=True)
-    with pytest.raises(Exception, match="null in a"):
-        bad.collect()
-
-
-def test_arrow_cumsum_gen_zero_row_batch_passthrough():
-    """Arrow can legally deliver 0-row record batches mid-stream
-    (upstream filtering / batch slicing); the cumsum generator must
-    pass them through with the carry unchanged, not IndexError on
-    excl[0]. Driven directly at the generator so the empty batch is
-    guaranteed to occur (Spark rarely produces one)."""
-    import pyarrow as pa
-
-    from cdc_export_system_spark.operators.ranks import _arrow_cumsum_gen
-
-    gen = _arrow_cumsum_gen(["a", "x"], ["a_c", "x_c"], ["i", "f"])
-    schema = pa.schema([("a", pa.int64()), ("x", pa.float64())])
-    batches = [
-        pa.RecordBatch.from_pydict({"a": [1, 2], "x": [0.5, 1.0]}, schema=schema),
-        pa.RecordBatch.from_pydict({"a": [], "x": []}, schema=schema),
-        pa.RecordBatch.from_pydict({"a": [3], "x": [2.0]}, schema=schema),
-    ]
-    out = list(gen(iter(batches)))
-    assert [b.num_rows for b in out] == [2, 0, 1]
-    assert out[0].column(out[0].schema.names.index("a_c")).to_pylist() == [0, 1]
-    # the carry crosses the empty batch intact: 1 + 2 = 3
-    assert out[2].column(out[2].schema.names.index("a_c")).to_pylist() == [3]
-    assert out[2].column(out[2].schema.names.index("x_c")).to_pylist() == [1.5]

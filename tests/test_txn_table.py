@@ -621,3 +621,28 @@ def test_changes_replication_tracks_every_version(spark, tmp_path):
         got = {(r["k"], r["v"]) for r in replica.read(version=rv).collect()}
         want = {(r["k"], r["v"]) for r in src.read(version=v).collect()}
         assert got == want, f"replica diverged at source v{v}"
+
+
+def test_source_max_int_falls_back_on_unreadable_or_non_int_footer(tmp_path):
+    """The txn queries' footer fast path must return None — sending the
+    caller to the Spark max-scan — for a file that is not parquet and
+    for a DATE column (physical INT32, statistic a datetime.date)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_export_system_spark.io.txn_queries import _source_max_int
+
+    (tmp_path / "junk.parquet").write_bytes(b"not a parquet file at all")
+    assert _source_max_int(str(tmp_path), "junk", "k") is None
+
+    pq.write_table(
+        pa.table({
+            "d": pa.array([datetime.date(2020, 1, 1), datetime.date(2021, 6, 30)]),
+            "k": pa.array([3, 7], pa.int32()),
+        }),
+        str(tmp_path / "dated.parquet"),
+    )
+    assert _source_max_int(str(tmp_path), "dated", "d") is None
+    assert _source_max_int(str(tmp_path), "dated", "k") == 7
